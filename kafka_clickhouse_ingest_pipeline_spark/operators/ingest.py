@@ -14,11 +14,14 @@ reorder them. Citations point at the reference behavior being replicated
                        (receivedAt = now()); consumer/clickhouse/init-db.sh:28-29
                        (_raw_data, _received_at)
 
-All of it is built-in expression work — no UDFs, fully inside whole-stage
-codegen.
+The validity decision is one stdlib function, :func:`json_kind`, shared with
+the HTTP front door and reached from Spark through one Arrow UDF; the rest is
+built-in expression work inside whole-stage codegen.
 """
 
 from __future__ import annotations
+
+import json
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -53,188 +56,85 @@ def filter_nonempty(df: DataFrame, payload_col: str = "value") -> DataFrame:
     return df.filter(c.isNotNull() & (F.length(c) > 0))
 
 
-def json_validity_gate(
-    df: DataFrame, payload_col: str = "value", variant_col: str | None = None
-) -> DataFrame:
-    """A3: keep only payloads that parse as JSON (handler.go:74-78).
+def _reject_constant(name: str) -> None:
+    raise ValueError(f"{name} is not JSON")
 
-    ``json.Valid`` accepts any JSON value; we use try-parse-as-variant so
-    scalars, arrays and objects all pass, mirroring Go's semantics.
-    json.Valid is also whole-string strict, so bracketed docs with
-    trailing garbage ('{"a":1}junk') are rejected via the span fold —
-    the same strictness DuckDB's json_valid applies on the oracle side.
-    Non-string scalars keep the lenient path: try_parse_json already
-    rejects '12junk'/'nulljunk'. String scalars get the same whole-string
-    strictness via their own span fold ('"x"junk' drops, matching
-    json.Valid) — with that, the gate is whole-string strict for every
-    JSON value shape.
 
-    ``variant_col``: when set, the parsed variant the gate already paid
-    for is kept under that name so downstream field extraction reuses it
-    (one JSON parse per row instead of one per consumer — measured on
-    pipeline_flagship, whose get_json_object re-parse was its third
-    full parse of the payload).
+# Built once: json.loads(s, **kw) constructs a decoder per call, 3.5x
+# slower on short payloads. parse_int=float keeps integers longer than the
+# interpreter's 4,300-digit int() limit valid, as they are in JSON.
+_JSON_DECODER = json.JSONDecoder(parse_constant=_reject_constant, parse_int=float)
+_JSON_KINDS = {
+    dict: "object",
+    list: "array",
+    str: "string",
+    float: "number",
+    bool: "boolean",
+    type(None): "null",
+}
+
+
+def json_kind(payload: str | bytes | None) -> str | None:
+    """A3: the one JSON-validity decision (handler.go:74-78, Go json.Valid).
+
+    Returns the kind of the single RFC 8259 value that spans ``payload``
+    ("object", "array", "string", "number", "boolean" or "null"), or None
+    when the payload is anything else: trailing garbage, ``NaN``/
+    ``Infinity``, invalid UTF-8, a byte-order mark, raw control characters
+    inside strings. Only space, tab, newline and carriage return count as
+    surrounding whitespace. Nesting deeper than the interpreter's
+    recursion limit (about 1,000 levels; Go allows 10,000) counts as
+    invalid rather than failing the batch.
+
+    The front door answers 400 on None; :func:`json_validity_gate` keeps
+    the rows whose kind is not None and :func:`parse_typed` the "object"
+    rows, both through ``udfs.json_kind_udf`` — so a 202-accepted object
+    payload is never dropped for validity downstream.
     """
-    from .udfs import json_strict_span_udf
-
-    raw = F.col(payload_col).cast("string")
-    # the Arrow kernel replays both span state machines (bracketed docs
-    # and string scalars) vectorized across the batch; the JVM HOF folds
-    # below remain the semantic reference (parity pinned in
-    # test_ingest.test_strict_span_kernel_matches_jvm_folds) but cost
-    # ~10 struct ops per CHARACTER per row and doubled the flagship
-    # ingest query's runtime when they sat in the hot filter path
-    if variant_col is None:
-        return df.filter(
-            F.try_parse_json(raw).isNotNull() & json_strict_span_udf(raw)
-        )
-    return df.withColumn(variant_col, F.try_parse_json(raw)).filter(
-        F.col(variant_col).isNotNull() & json_strict_span_udf(raw)
-    )
+    if payload is None:
+        return None
+    try:
+        if isinstance(payload, bytes):
+            payload = payload.decode("utf-8")
+        return _JSON_KINDS[type(_JSON_DECODER.decode(payload))]
+    except (ValueError, RecursionError):
+        return None
 
 
-def json_value_spans_string(raw: Column) -> Column:
-    """True iff the first JSON object/array in ``raw`` ends at the last
-    non-whitespace character — kotlinx/Go whole-string strictness.
+def json_validity_gate(df: DataFrame, payload_col: str = "value") -> DataFrame:
+    """A3: keep only payloads Go ``json.Valid`` accepts (handler.go:74-78):
+    one whole-string JSON value of any kind, as :func:`json_kind` decides."""
+    from .udfs import json_kind_udf
 
-    Spark's ``try_parse_json``/``from_json`` stop at the end of the first
-    complete document and accept trailing garbage (``'{"a":1}junk'``);
-    kotlinx ``decodeFromString`` (MessageProcessorTest.kt: ``'{"sensorId":
-    "G7"}invalid'`` must drop) and Go ``json.Valid`` require the value to
-    span the input. No parser option closes the gap, so this walks the
-    characters with a JVM higher-order ``aggregate`` fold (still no
-    Python): a depth/in-string/escape state machine that flags anything
-    non-whitespace after the value closes. Combine with ``try_parse_json``
-    (which validates the prefix is real JSON) for full strictness.
-
-    Scalar documents (``'null'``, ``'12'``) report False here — callers
-    that accept scalars must gate only bracketed docs on this check.
-    Payloads are event-sized; the per-character fold is in-row work that
-    scales linearly with payload bytes, not corpus size.
-    """
-    init = F.struct(
-        F.lit(0).alias("depth"),
-        F.lit(False).alias("instr"),
-        F.lit(False).alias("esc"),
-        F.lit(False).alias("done"),
-        F.lit(False).alias("bad"),
-    )
-
-    def step(acc: Column, c: Column) -> Column:
-        is_ws = c.isin(" ", "\t", "\n", "\r", "")
-        open_b = (c == "{") | (c == "[")
-        close_b = (c == "}") | (c == "]")
-        in_str = acc["instr"]
-        depth_inc = ~in_str & ~acc["done"] & open_b
-        depth_dec = ~in_str & ~acc["done"] & close_b
-        new_depth = acc["depth"] + F.when(depth_inc, 1).when(depth_dec, -1).otherwise(0)
-        new_done = acc["done"] | (depth_dec & (new_depth == 0))
-        new_bad = (
-            acc["bad"]
-            | (acc["done"] & ~is_ws)  # anything after the value closed
-            | (depth_dec & (new_depth < 0))  # unbalanced close
-            # non-ws before any bracket opens = scalar doc or garbage
-            | (~in_str & ~acc["done"] & (acc["depth"] == 0) & ~is_ws & ~open_b)
-        )
-        # leaving a string needs an unescaped quote; entering one needs
-        # to be inside the doc (depth > 0)
-        stays_in_str = in_str & ~(~acc["esc"] & (c == '"'))
-        enters_str = ~in_str & ~acc["done"] & (acc["depth"] > 0) & (c == '"')
-        return F.struct(
-            new_depth.alias("depth"),
-            F.when(in_str, stays_in_str).otherwise(enters_str).alias("instr"),
-            (in_str & ~acc["esc"] & (c == "\\")).alias("esc"),
-            new_done.alias("done"),
-            new_bad.alias("bad"),
-        )
-
-    return F.aggregate(
-        F.split(raw, ""),
-        init,
-        step,
-        lambda acc: acc["done"] & ~acc["bad"],
-    )
-
-
-def string_scalar_spans_string(raw: Column) -> Column:
-    """True iff ``raw`` is exactly one JSON string scalar (optionally
-    whitespace-padded) — the string-scalar twin of
-    :func:`json_value_spans_string`, closing the last documented
-    deviation from Go ``json.Valid`` / kotlinx whole-string strictness
-    (``'"x"junk'`` must drop). Same JVM higher-order fold, simpler state
-    machine: before-quote / in-string(+escape) / after-close. Combine
-    with ``try_parse_json`` (which validates escapes are real)."""
-    init = F.struct(
-        F.lit(False).alias("started"),
-        F.lit(False).alias("instr"),
-        F.lit(False).alias("esc"),
-        F.lit(False).alias("done"),
-        F.lit(False).alias("bad"),
-    )
-
-    def step(acc: Column, c: Column) -> Column:
-        is_ws = c.isin(" ", "\t", "\n", "\r", "")
-        closes = acc["instr"] & ~acc["esc"] & (c == '"')
-        return F.struct(
-            (acc["started"] | (c == '"')).alias("started"),
-            F.when(acc["instr"], ~closes)
-            .otherwise(~acc["started"] & (c == '"'))
-            .alias("instr"),
-            (acc["instr"] & ~acc["esc"] & (c == "\\")).alias("esc"),
-            (acc["done"] | closes).alias("done"),
-            (
-                acc["bad"]
-                | (acc["done"] & ~is_ws)  # anything after the close quote
-                | (~acc["started"] & ~is_ws & (c != '"'))  # pre-quote junk
-            ).alias("bad"),
-        )
-
-    return F.aggregate(
-        F.split(raw, ""),
-        init,
-        step,
-        lambda acc: acc["done"] & ~acc["bad"],
-    )
+    return df.filter(json_kind_udf(F.col(payload_col).cast("string")).isNotNull())
 
 
 def parse_typed(
     df: DataFrame,
     payload_col: str = "value",
     schema: StructType = INGESTED_DATA_SCHEMA,
-    keep_raw: bool = True,
-    drop_malformed: bool = True,
 ) -> DataFrame:
-    """A9/A16: lenient typed JSON parse, malformed rows dropped not failed.
+    """A9/A13/A16: lenient typed JSON parse, malformed rows dropped not failed,
+    raw payload kept as ``_raw_data`` (init-db.sh:28).
 
     `from_json` is natively lenient the same way kotlinx with
-    ``ignoreUnknownKeys`` is: unknown keys ignored, missing keys → null,
-    malformed document → null struct (PERMISSIVE). The drop-don't-fail
-    semantics of MessageProcessor.kt:36-46 become a null filter.
+    ``ignoreUnknownKeys`` is: unknown keys ignored, missing keys → null.
+    kotlinx ``decodeFromString<IngestedData>`` rejects anything but one
+    whole JSON object ('null', '[1,2]', '{"sensorId":"G7"}invalid' in
+    MessageProcessorTest.kt), so rows must be of kind "object" by
+    :func:`json_kind`; the drop-don't-fail semantics of
+    MessageProcessor.kt:36-46 become that filter plus a null check on the
+    parsed struct.
     """
-    raw = F.col(payload_col).cast("string")
-    out = df.withColumn("_parsed", F.from_json(raw, schema))
-    if keep_raw:
-        # A13: optional raw-payload retention (init-db.sh:28 `_raw_data`)
-        out = out.withColumn("_raw_data", raw)
-    if drop_malformed:
-        # PERMISSIVE from_json yields an all-null struct (not a null) for
-        # malformed documents, so gate on JSON validity too; and kotlinx
-        # decodeFromString<IngestedData> rejects valid-but-non-object JSON
-        # ('null', '[1,2]'), so require an object (first char '{'). The
-        # span check closes the former trailing-garbage deviation:
-        # '{"sensorId":"G7"}invalid' (MessageProcessorTest.kt) now drops
-        # here exactly as kotlinx drops it.
-        from .udfs import json_strict_span_udf
+    from .udfs import json_kind_udf
 
-        # for '{'-docs the combined Arrow kernel equals the bracket span
-        # fold (string-scalar branch can't fire); same filter, batch speed
-        out = out.filter(
-            F.try_parse_json(raw).isNotNull()
-            & F.startswith(F.ltrim(raw), F.lit("{"))
-            & json_strict_span_udf(raw)
-            & F.col("_parsed").isNotNull()
-        )
-    return out.select("_parsed.*", *(["_raw_data"] if keep_raw else []))
+    raw = F.col(payload_col).cast("string")
+    return (
+        df.filter(json_kind_udf(raw) == "object")
+        .withColumn("_parsed", F.from_json(raw, schema))
+        .filter(F.col("_parsed").isNotNull())
+        .select("_parsed.*", raw.alias("_raw_data"))
+    )
 
 
 def parse_dynamic(df: DataFrame, payload_col: str = "value") -> DataFrame:
@@ -294,11 +194,17 @@ def observe_parse_quality(
     scan — zero extra jobs; read via QueryExecutionListener /
     StreamingQueryListener.
     """
-    parsed = F.try_parse_json(F.col(payload_col).cast("string"))
-    return df.observe(
-        name,
-        F.count(F.lit(1)).alias("total"),
-        F.count(F.when(parsed.isNull(), 1)).alias("invalid"),
+    from .udfs import json_kind_udf
+
+    kind = json_kind_udf(F.col(payload_col).cast("string"))
+    return (
+        df.withColumn("_json_kind", kind)
+        .observe(
+            name,
+            F.count(F.lit(1)).alias("total"),
+            F.count(F.when(F.col("_json_kind").isNull(), 1)).alias("invalid"),
+        )
+        .drop("_json_kind")
     )
 
 

@@ -17,22 +17,32 @@ can't express. Rules of engagement (enforced by example here):
 
 from __future__ import annotations
 
+import sys
+from pathlib import Path
+
 import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import BooleanType, DoubleType, LongType
+from pyspark.sql.types import DoubleType, LongType, StringType
 
 
 @F.pandas_udf(DoubleType())
 def l2_norm_udf(vecs: pd.Series) -> pd.Series:
     """Scalar pandas_udf: L2 norm of an embedding column.
 
-    One numpy call per Arrow batch; the column arrives as a Series of
-    numpy arrays.
+    The column arrives as a Series of numpy arrays. Squares are summed in
+    float64 left to right (``add.accumulate`` never reassociates), the
+    oracle's fold: ``np.dot`` on ``array<float>`` rows accumulates in
+    float32 and rounded some norms differently in the 4th decimal.
     """
-    return vecs.map(lambda v: float(np.sqrt(np.dot(v, v))))
+
+    def norm(v):
+        sq = np.square(np.asarray(v, dtype=np.float64))
+        return float(np.sqrt(np.add.accumulate(sq)[-1])) if len(sq) else 0.0
+
+    return vecs.map(norm, na_action="ignore")
 
 
 @F.pandas_udf(DoubleType())
@@ -240,107 +250,19 @@ def make_hilbert_udf(bits: int = 16):
     return hilbert_udf
 
 
-@F.pandas_udf(BooleanType())
-def json_strict_span_udf(raw: pd.Series) -> pd.Series:
-    """Whole-string JSON strictness (Go json.Valid / kotlinx), Arrow-
-    vectorized: True iff a bracketed doc or string scalar spans the
-    entire payload (trailing whitespace allowed); non-bracketed,
-    non-string scalars return True and defer to try_parse_json, which is
-    already strict for them. Combines `ingest.json_value_spans_string`
-    and `ingest.string_scalar_spans_string` — the per-character JVM HOF
-    folds those implement are semantically exact but evaluate ~10 struct
-    ops per character per row and doubled the flagship ingest query.
-    This kernel replays the identical state machines but loops over CHAR
-    POSITIONS with numpy ops vectorized across the batch (the LSH-kernel
-    trick): payloads are event-sized, so the loop is ~payload-length
-    iterations per batch instead of per row.
+# pipeline_flagship, the query `__spark_entry__.entry` runs, gates through
+# json_kind_udf, so its Python workers must find the package even when
+# nothing put it on their path: the UDF body carries the root with it.
+_PACKAGE_ROOT = str(Path(__file__).resolve().parents[2])
 
-    NULL payloads return False (the JVM gate drops them via
-    try_parse_json anyway, so the combined filter is unchanged).
-    """
-    n = len(raw)
-    vals = raw.to_numpy(dtype=object)
-    # dtype=bool matters: np.array([]) defaults to float64 and the
-    # bitwise combine below would crash on an empty Arrow batch
-    is_str = np.array([isinstance(x, str) for x in vals], dtype=bool)
-    lt_first = np.array(
-        [x.lstrip(" \t\n\r")[:1] if isinstance(x, str) else "" for x in vals],
-        dtype=object,
-    )
-    bracketed = (lt_first == "{") | (lt_first == "[")
-    strsc = lt_first == '"'
-    out = is_str & ~bracketed & ~strsc  # scalars: defer to try_parse_json
 
-    def char_matrix(idx):
-        sub = [vals[i] for i in idx]
-        m = max(len(x) for x in sub)
-        A = np.array(sub, dtype=f"U{m}")
-        return A.view("U1").reshape(len(sub), m), np.array(
-            [len(x) for x in sub]
-        )
+@F.pandas_udf(StringType())
+def json_kind_udf(raw: pd.Series) -> pd.Series:
+    """Arrow entry point for `ingest.json_kind`: each payload's JSON kind,
+    null where Go json.Valid rejects it. The stream's gates decide validity
+    with the very function the HTTP front door calls."""
+    if _PACKAGE_ROOT not in sys.path:
+        sys.path.append(_PACKAGE_ROOT)
+    from kafka_clickhouse_ingest_pipeline_spark.operators.ingest import json_kind
 
-    WS = (" ", "\t", "\n", "\r")
-
-    bidx = np.flatnonzero(bracketed)
-    if len(bidx):
-        M, lens = char_matrix(bidx)
-        k = len(bidx)
-        depth = np.zeros(k, dtype=np.int64)
-        instr = np.zeros(k, dtype=bool)
-        esc = np.zeros(k, dtype=bool)
-        done = np.zeros(k, dtype=bool)
-        bad = np.zeros(k, dtype=bool)
-        for pos in range(M.shape[1]):
-            c = M[:, pos]
-            active = pos < lens
-            is_ws = np.isin(c, WS)
-            open_b = (c == "{") | (c == "[")
-            close_b = (c == "}") | (c == "]")
-            depth_inc = ~instr & ~done & open_b
-            depth_dec = ~instr & ~done & close_b
-            new_depth = depth + np.where(depth_inc, 1, 0) - np.where(depth_dec, 1, 0)
-            new_done = done | (depth_dec & (new_depth == 0))
-            new_bad = (
-                bad
-                | (done & ~is_ws)
-                | (depth_dec & (new_depth < 0))
-                | (~instr & ~done & (depth == 0) & ~is_ws & ~open_b)
-            )
-            stays = instr & ~(~esc & (c == '"'))
-            enters = ~instr & ~done & (depth > 0) & (c == '"')
-            new_instr = np.where(instr, stays, enters)
-            new_esc = instr & ~esc & (c == "\\")
-            depth = np.where(active, new_depth, depth)
-            instr = np.where(active, new_instr, instr)
-            esc = np.where(active, new_esc, esc)
-            done = np.where(active, new_done, done)
-            bad = np.where(active, new_bad, bad)
-        out[bidx] = done & ~bad
-
-    sidx = np.flatnonzero(strsc)
-    if len(sidx):
-        M, lens = char_matrix(sidx)
-        k = len(sidx)
-        started = np.zeros(k, dtype=bool)
-        instr = np.zeros(k, dtype=bool)
-        esc = np.zeros(k, dtype=bool)
-        done = np.zeros(k, dtype=bool)
-        bad = np.zeros(k, dtype=bool)
-        for pos in range(M.shape[1]):
-            c = M[:, pos]
-            active = pos < lens
-            is_ws = np.isin(c, WS)
-            closes = instr & ~esc & (c == '"')
-            new_started = started | (c == '"')
-            new_instr = np.where(instr, ~closes, ~started & (c == '"'))
-            new_esc = instr & ~esc & (c == "\\")
-            new_done = done | closes
-            new_bad = bad | (done & ~is_ws) | (~started & ~is_ws & (c != '"'))
-            started = np.where(active, new_started, started)
-            instr = np.where(active, new_instr, instr)
-            esc = np.where(active, new_esc, esc)
-            done = np.where(active, new_done, done)
-            bad = np.where(active, new_bad, bad)
-        out[sidx] = done & ~bad
-
-    return pd.Series(out)
+    return pd.Series([json_kind(p) for p in raw], dtype=object)

@@ -28,8 +28,8 @@ from ..tables import load_table
              AS l2_norm
     FROM embeddings
     """,
-    description="C13 scalar pandas_udf: vectorized L2 norms over the "
-    "embedding column (one numpy call per Arrow batch).",
+    description="C13 scalar pandas_udf: L2 norms over the embedding "
+    "column (float64 squares summed in the oracle's left-to-right order).",
 )
 def udf_vector_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")

@@ -10,7 +10,9 @@ out-of-engine; this module closes it with pure stdlib:
 - ``IngestHTTPServer``: `http.server`-based front door with the exact route
   and status-code semantics of `handler.go` (405 wrong method, 401 missing or
   invalid key, 500 auth backend error, 400 empty body, 400 invalid JSON,
-  202 "Payload accepted" on queue; `GET /healthz` -> 200 "OK").
+  202 "Payload accepted" on queue; `GET /healthz` -> 200 "OK"). JSON
+  validity is `operators.ingest.json_kind`, the same call the stream's
+  gates make, so no accepted payload is dropped downstream as invalid JSON.
 - ``CachingAuthenticator``: the LRU+TTL decorator of
   `publisher/internal/auth/caching.go:26-80` — size<=0 disables caching,
   empty key short-circuits without touching cache or backend, hits return
@@ -20,24 +22,28 @@ out-of-engine; this module closes it with pure stdlib:
   100, BatchTimeout 1s, flush-on-close) writing newline-delimited payload
   files atomically (tmp + rename) into a spool directory.
 
-The spool directory is the engine ingress: `streaming.pipeline.file_source`
-streams it with the same one-payload-per-`value`-row contract as the Kafka
-topic, so everything downstream of the front door (A2..A17) is byte-for-byte
-the pipeline the Kafka path runs. On a real cluster the SpoolPublisher's
-target directory is object storage (or swapped back to `format("kafka")`);
-the HTTP tier scales horizontally exactly like the reference's publisher —
-it holds no state beyond the current un-flushed batch.
+The spool directory is the engine ingress: a Spark text stream over it
+surfaces one payload per `value` row, the Kafka topic's contract, so
+everything downstream of the front door (A2..A17) is byte-for-byte the
+pipeline the Kafka path runs. `streaming.pipeline.file_source` reads one
+spool file per trigger, for deterministic tests; throughput readers
+(`tools/soak.py`, `perfbench`) read up to 256 files per trigger. On a
+real cluster the SpoolPublisher's target directory is object storage (or
+swapped back to `format("kafka")`); the HTTP tier scales horizontally
+exactly like the reference's publisher — it holds no state beyond the
+current un-flushed batch.
 """
 
 from __future__ import annotations
 
-import json
 import os
 import threading
 import time
 from collections import OrderedDict
 from collections.abc import Callable
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+
+from ..operators.ingest import json_kind
 
 API_KEY_HEADER = "X-API-Key"
 
@@ -175,7 +181,10 @@ class SpoolPublisher:
         final = os.path.join(self.spool_dir, f"batch-{seq:09d}.jsonl")
         with open(tmp, "wb") as f:
             for payload in batch:
-                f.write(payload.replace(b"\n", b" ") + b"\n")
+                # Spark's text source ends a line at \n, \r or \r\n; in
+                # valid JSON both can only be whitespace between tokens
+                line = payload.replace(b"\n", b" ").replace(b"\r", b" ")
+                f.write(line + b"\n")
         os.rename(tmp, final)
         self.flushes += 1
 
@@ -305,9 +314,7 @@ class _Handler(BaseHTTPRequestHandler):
             self._reply(400, "Bad Request: Empty body\n")
             return
         # handler.go:74-78: json.Valid
-        try:
-            json.loads(body)
-        except ValueError:
+        if json_kind(body) is None:
             self._reply(400, "Bad Request: Invalid JSON\n")
             return
         # handler.go:81-93: async queue, 202 Accepted

@@ -30,7 +30,6 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
-from pyspark.sql.types import StructType
 
 from ..operators import ingest
 from ..plans.layout import write_clustered
@@ -133,14 +132,10 @@ def file_source(spark: SparkSession, path: str) -> DataFrame:
         spark.readStream.format("text")
         .option("maxFilesPerTrigger", 1)
         .load(path)
-        .withColumnRenamed("value", "value")
     )
 
 
-def ingest_transform(
-    raw: DataFrame,
-    schema: StructType = ingest.INGESTED_DATA_SCHEMA,
-) -> DataFrame:
+def ingest_transform(raw: DataFrame) -> DataFrame:
     """A2/A3/A9/A12/A13: the per-record pipeline, identical to batch mode.
 
     received_at_ms rides along as the true-instant epoch export
@@ -149,7 +144,7 @@ def ingest_transform(
     on UTC epochs, not session wall clocks.
     """
     df = ingest.filter_nonempty(raw, "value")
-    df = ingest.parse_typed(df, "value", schema=schema, keep_raw=True)
+    df = ingest.parse_typed(df, "value")
     return ingest.enrich_received_at(df, with_epoch_ms=True)
 
 

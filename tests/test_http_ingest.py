@@ -201,6 +201,65 @@ def test_http_to_streaming_pipeline_end_to_end(spark, tmp_path):
     assert json.loads(rows["s2"]._raw_data)["sensorId"] == "s2"
 
 
+def _nested(sensor_id: str, depth: int) -> bytes:
+    return f'{{"sensorId":"{sensor_id}","n":{"[" * depth}{"]" * depth}}}'.encode()
+
+
+# (body, front-door status, sensorId the sink must hold). Statuses are Go
+# json.Valid's, except nesting past the decoder's ~1,000 levels: Go allows
+# 10,000, but Spark's JSON parser stops at 1,000, so the door refuses it.
+AGREEMENT_CASES = [
+    (b'{"sensorId":"plain"}', 202, "plain"),
+    (b'\t{"sensorId":"tab"}', 202, "tab"),
+    (b'{"sensorId":"dup-first","sensorId":"dup"}', 202, "dup"),  # last wins
+    (b'{"sensorId":\r"cr"}\r\n', 202, "cr"),
+    (b'\n{"sensorId":"lf"}\n', 202, "lf"),
+    (_nested("deep", 64), 202, "deep"),
+    (b'{"sensorId":"nan","temperature":NaN}', 400, None),
+    (b'{"sensorId":"inf","temperature":Infinity}', 400, None),
+    (b'{"sensorId":"ninf","temperature":-Infinity}', 400, None),
+    (b'{"sensorId":"junk"}junk', 400, None),
+    (b'{"sensorId":"comma",}', 400, None),
+    (_nested("too-deep", 5000), 400, None),
+    (b'{"sensorId":"bad-utf8\xff"}', 400, None),
+    (b'\xef\xbb\xbf{"sensorId":"bom"}', 400, None),
+    ('{"sensorId":"utf16"}'.encode("utf-16"), 400, None),
+    # valid non-objects are accepted, then dropped by the typed parse
+    # exactly as kotlinx decodeFromString<IngestedData> drops them
+    (b"42", 202, None),
+    (b'"scalar"', 202, None),
+    (b"null", 202, None),
+    (b'[{"sensorId":"array"}]', 202, None),
+]
+
+
+def test_front_door_and_stream_agree_on_json_validity(spark, tmp_path):
+    """A 202 means the payload reaches the consumer (handler.go:74-93):
+    every object body the front door accepts lands in the sink, and no
+    body it refuses does."""
+    spool = str(tmp_path / "spool")
+    pub = H.SpoolPublisher(spool, batch_size=100, batch_timeout_s=0.2)
+    srv = H.IngestHTTPServer(pub, authenticate=lambda k: k == "good-key").start()
+    try:
+        statuses = [
+            _req(srv.url + "/ingest", "POST", body, api_key="good-key")[0]
+            for body, _, _ in AGREEMENT_CASES
+        ]
+    finally:
+        srv.close()
+    assert statuses == [status for _, status, _ in AGREEMENT_CASES]
+
+    out = str(tmp_path / "out")
+    P.run_pipeline(
+        P.file_source(spark, spool),
+        out_path=out,
+        checkpoint=str(tmp_path / "ckpt"),
+        available_now=True,
+    ).awaitTermination(120)
+    stored = [r.sensorId for r in spark.read.parquet(os.path.join(out, "data")).collect()]
+    assert sorted(stored) == sorted(sid for _, _, sid in AGREEMENT_CASES if sid)
+
+
 def test_interrupted_flush_tmp_file_is_invisible_to_spark(spark, tmp_path):
     """A crash between tmp-write and rename leaves `._tmp-*` in the spool;
     Spark's file listing skips dot/underscore-prefixed files, so a

@@ -61,7 +61,7 @@ class TestTypedParse:
         assert ingest.parse_typed(df).count() == 0
 
     def test_raw_payload_retained(self, spark):
-        row = ingest.parse_typed(_payload_df(spark, [VALID]), keep_raw=True).collect()[0]
+        row = ingest.parse_typed(_payload_df(spark, [VALID])).collect()[0]
         assert row._raw_data == VALID
 
 
@@ -87,7 +87,7 @@ class TestDynamicMapParse:
 
 class TestProjection:
     def test_fixed_projection_missing_column_is_null(self, spark):
-        df = ingest.parse_typed(_payload_df(spark, [VALID]), keep_raw=False)
+        df = ingest.parse_typed(_payload_df(spark, [VALID]))
         out = ingest.project_fixed(df, ("sensorId", "temperature", "humidity"))
         row = out.collect()[0]
         assert row.sensorId == "A1" and row.humidity is None
@@ -101,7 +101,7 @@ class TestProjection:
 
 class TestEnrichment:
     def test_received_at_added(self, spark):
-        df = ingest.parse_typed(_payload_df(spark, [VALID]), keep_raw=False)
+        df = ingest.parse_typed(_payload_df(spark, [VALID])).select("sensorId")
         out = ingest.enrich_received_at(df)
         assert "received_at" in out.columns
         assert "received_at_ms" not in out.columns
@@ -111,7 +111,7 @@ class TestEnrichment:
         """with_epoch_ms exports the INSTANT epoch (epoch_ms_instant):
         received_at_ms must equal floor(unix_micros(received_at)/1000)
         regardless of session zone — the external-sink contract."""
-        df = ingest.parse_typed(_payload_df(spark, [VALID]), keep_raw=False)
+        df = ingest.parse_typed(_payload_df(spark, [VALID])).select("sensorId")
         out = ingest.enrich_received_at(df, with_epoch_ms=True)
         assert "received_at_ms" in out.columns
         bad = out.filter(
@@ -205,7 +205,7 @@ class TestKotlinxStrictParseParity:
 
     def test_mixed_batch_keeps_exactly_the_kotlinx_survivors(self, spark):
         df = _payload_df(spark, self.KOTLINX_ACCEPT + self.KOTLINX_REJECT)
-        out = ingest.parse_typed(df, keep_raw=True)
+        out = ingest.parse_typed(df)
         assert sorted(r["_raw_data"] for r in out.collect()) == sorted(
             self.KOTLINX_ACCEPT
         )
@@ -223,10 +223,13 @@ class TestKotlinxStrictParseParity:
 
 
 class TestStringScalarStrictness:
-    """A3 gate, string-scalar whole-string strictness — the LAST
-    documented deviation from Go json.Valid, now closed: '"x"junk' drops
-    while every legal string scalar (escapes, padding, embedded quotes)
-    still passes."""
+    """A3 gate, Go json.Valid parity for every JSON value shape: string
+    scalars are whole-string strict ('"x"junk' drops) while every legal
+    string scalar (escapes, padding, embedded quotes) still passes; braces
+    inside strings, escaped quotes, nesting and trailing whitespace never
+    fool it. The verdicts are Go's, written out, except nesting: Go allows
+    10,000 levels, the shared decision about 1,000 (as Spark's own JSON
+    parser)."""
 
     def test_validity_gate_full_json_valid_parity(self, spark):
         cases = {
@@ -243,72 +246,99 @@ class TestStringScalarStrictness:
             "12": True,
             "12junk": False,
             "true": True,
+            # bracketed docs and the remaining scalar shapes
+            '{"a":1}': True,
+            '{"a":1}junk': False,
+            '{"a":1}   ': True,
+            '  {"a":1}': True,
+            '{"a":"}"}': True,
+            '{"a":"}"}x': False,
+            '{"a":"\\""}': True,
+            '{"a":"\\""}junk': False,
+            '{"a":{"b":[1,2]}}': True,
+            '{"a":1}}': False,
+            "[1,2,3]": True,
+            "[1,2]x": False,
+            "[]": True,
+            '"x"  ': True,
+            '  "x"': True,
+            '"a\\"b"': True,
+            '"a\\"b"z': False,
+            "null": True,
+            "truex": False,
+            "": False,
+            "   ": False,
+            '{"sensorId":"G7"}invalid': False,
+            # DuckDB json_valid accepts these two; Go does not
+            "NaN": False,
+            '{"a":1,}': False,
+            "-Infinity": False,
+            '{"a":1,"a":2}': True,      # duplicate keys are valid
+            "-0.5e3": True,
+            "1" * 5000: True,           # past int()'s 4,300-digit limit
+            "\x0c{}": False,            # form feed is not JSON whitespace
+            '"\x01"': False,            # raw control character in a string
+            "\ufeff{}": False,          # byte-order mark
+            "[" * 5000 + "]" * 5000: False,  # past the ~1,000-level limit
         }
         df = _payload_df(spark, list(cases))
         kept = {r["value"] for r in ingest.json_validity_gate(df).collect()}
         assert kept == {p for p, ok in cases.items() if ok}
 
 
-def test_strict_span_kernel_matches_jvm_folds(spark, sf_dir):
-    """The Arrow strict-span kernel must reproduce the JVM HOF folds'
-    combined decision on every real payload AND the adversarial shapes:
-    braces inside strings, escaped quotes, nested docs, trailing
-    whitespace vs trailing junk, string scalars, bare scalars."""
-    from pyspark.sql import functions as F
+def test_validity_gate_matches_duckdb_json_valid_on_real_payloads(spark, sf_dir):
+    """On every real events.props the gate keeps exactly the rows DuckDB
+    json_valid keeps — the decision pipeline_flagship's oracle makes."""
+    import duckdb
 
-    from kafka_clickhouse_ingest_pipeline_spark.operators.ingest import (
-        json_value_spans_string,
-        string_scalar_spans_string,
-    )
-    from kafka_clickhouse_ingest_pipeline_spark.operators.udfs import (
-        json_strict_span_udf,
-    )
     from kafka_clickhouse_ingest_pipeline_spark.tables import load_table
 
-    def jvm_combined(raw):
-        lt = F.ltrim(raw)
-        bracketed = F.startswith(lt, F.lit("{")) | F.startswith(lt, F.lit("["))
-        strsc = F.startswith(lt, F.lit('"'))
-        return (~bracketed | json_value_spans_string(raw)) & (
-            ~strsc | string_scalar_spans_string(raw)
-        )
-
-    ev = load_table(spark, sf_dir, "events").select(
-        F.col("props").cast("string").alias("raw")
-    )
-    cmp = ev.select(
-        jvm_combined(F.col("raw")).alias("jvm"),
-        json_strict_span_udf(F.col("raw")).alias("arrow"),
-    )
-    assert cmp.where("jvm != arrow").count() == 0
-
-    cases = [
-        '{"a":1}', '{"a":1}junk', '{"a":1}   ', '  {"a":1}',
-        '{"a":"}"}', '{"a":"}"}x', '{"a":"\\""}', '{"a":"\\""}junk',
-        '{"a":{"b":[1,2]}}', '{"a":1}}', '[1,2,3]', '[1,2]x', '[]',
-        '"x"', '"x"junk', '"x"  ', '  "x"', '"a\\"b"', '"a\\"b"z',
-        '""', 'null', '12', '12junk', 'truex', '', '   ',
-        '{"sensorId":"G7"}invalid',
-    ]
-    df = spark.createDataFrame([(c,) for c in cases], "raw string")
-    rows = df.select(
-        "raw",
-        jvm_combined(F.col("raw")).alias("jvm"),
-        json_strict_span_udf(F.col("raw")).alias("arrow"),
-    ).collect()
-    for r in rows:
-        assert r.jvm == r.arrow, (r.raw, r.jvm, r.arrow)
+    ev = load_table(spark, sf_dir, "events")
+    kept = {r.event_id for r in ingest.json_validity_gate(ev, "props").collect()}
+    oracle = {
+        r[0]
+        for r in duckdb.sql(
+            f"SELECT event_id FROM read_parquet('{sf_dir}/events.parquet') "
+            "WHERE props IS NOT NULL AND json_valid(props)"
+        ).fetchall()
+    }
+    assert kept == oracle
 
 
-def test_strict_span_kernel_handles_empty_arrow_batch():
-    """Empty batches reach kernels when a partition filters to nothing;
-    np.array([]) defaults to float64 and would crash the bitwise
-    combine — regression-pinned at the kernel level."""
+def test_json_kind_udf_handles_empty_arrow_batch():
+    """Empty batches reach kernels when a partition filters to nothing."""
     import pandas as pd
 
-    from kafka_clickhouse_ingest_pipeline_spark.operators.udfs import (
-        json_strict_span_udf,
-    )
+    from kafka_clickhouse_ingest_pipeline_spark.operators.udfs import json_kind_udf
 
-    out = json_strict_span_udf.func(pd.Series([], dtype=object))
-    assert list(out) == []
+    assert list(json_kind_udf.func(pd.Series([], dtype=object))) == []
+
+
+def test_json_kind_udf_runs_where_the_package_is_not_on_the_path(tmp_path):
+    """entry() gates through this UDF: a Python worker that cannot import
+    the package by name (Spark started outside the repo, no PYTHONPATH) must
+    still run it."""
+    import os
+    import subprocess
+    import sys
+
+    from pyspark import cloudpickle
+
+    from kafka_clickhouse_ingest_pipeline_spark.operators.udfs import json_kind_udf
+
+    code = (
+        "import pickle, sys, pandas as pd; "
+        "f = pickle.loads(sys.stdin.buffer.read()); "
+        "print(list(f(pd.Series(['{}', '[1]x', None]))))"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    out = subprocess.run(
+        [sys.executable, "-c", code],
+        input=cloudpickle.dumps(json_kind_udf.func),
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        check=True,
+        timeout=60,
+    )
+    assert out.stdout.decode().strip() == "['object', None, None]"

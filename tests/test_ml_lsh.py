@@ -203,6 +203,32 @@ def test_seqdot_udf_null_vector_yields_null_not_crash(spark):
     assert rows[3] is None  # ragged pair -> null
 
 
+def test_l2_norm_udf_matches_oracle_fold_on_float_embeddings(spark):
+    """udf_vector_norms parity: for array<float> embeddings the norm must
+    equal the oracle's float64 left-to-right sum of squares. This vector
+    rounds to 2.1799 with a float32 np.dot and to 2.18 in the oracle; the
+    NULL embedding must come back null, not crash the worker."""
+    import duckdb
+
+    from kafka_clickhouse_ingest_pipeline_spark.functions.rounding import round4
+    from kafka_clickhouse_ingest_pipeline_spark.operators.udfs import l2_norm_udf
+
+    vec = [1.626, -1.229, 0.731, 0.252]
+    df = spark.createDataFrame([(1, vec), (2, None)], "id long, emb array<float>")
+    rows = {
+        r.id: r.n
+        for r in df.select("id", round4(l2_norm_udf("emb")).alias("n")).collect()
+    }
+    oracle = duckdb.connect().execute(
+        "SELECT (FLOOR(sqrt(list_reduce(list_transform(CAST(? AS FLOAT[]), "
+        "x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), (acc, x) -> acc + x))"
+        " * 10000.0 + 0.5 + 0.000001) / 10000.0)",
+        [vec],
+    ).fetchone()[0]
+    assert rows == {1: oracle, 2: None}
+    assert oracle == 2.18
+
+
 def test_sq8_rescore_matches_bruteforce_exactly_on_candidates(spark, sf_dir):
     """SQ8 shortlist-then-rescore: rescored cosines must be the EXACT
     brute-force values for those ids (rescore reads the float table),

@@ -43,7 +43,7 @@ def test_parse_typed_matches_json_module(spark, batch):
     df = spark.createDataFrame(
         [(json.dumps(p),) for p in batch], "value string"
     )
-    rows = ingest.parse_typed(df, keep_raw=True).collect()
+    rows = ingest.parse_typed(df).collect()
     assert len(rows) == len(batch)
     by_raw = {r._raw_data: r for r in rows}
     for p in batch:
@@ -105,7 +105,7 @@ def test_round4_is_engine_portable(spark, xs):
     assert got_spark == got_duck
 
 
-# JSON values for the whole-string span-fold property: nested objects/
+# JSON values for the whole-string validity-gate property: nested objects/
 # arrays with string values that may contain braces/brackets/escapes —
 # the cases that break naive balance counters.
 _json_vals = st.recursive(
@@ -146,29 +146,22 @@ _json_vals = st.recursive(
         max_size=8,
     )
 )
-def test_span_fold_accepts_iff_whole_string_is_one_value(spark, batch):
-    """json_value_spans_string must be True exactly when the serialized
+def test_validity_gate_accepts_iff_whole_string_is_one_value(spark, batch):
+    """json_validity_gate must keep a payload exactly when the serialized
     bracketed doc plus the suffix is still ONE whole JSON value (i.e. the
     suffix is whitespace) — for arbitrarily nested docs whose strings may
     contain braces, quotes and escapes."""
-    from pyspark.sql import functions as F
-
     rows, want = [], []
-    for val, suffix in batch:
+    for i, (val, suffix) in enumerate(batch):
         doc = json.dumps(val)
         if not doc or doc[0] not in "{[":
             doc = json.dumps({"v": val})  # force a bracketed doc
-        payload = doc + suffix
-        rows.append((payload,))
+        rows.append((i, doc + suffix))
         want.append(suffix.strip() == "")
-    df = spark.createDataFrame(rows, "raw string")
-    got = [
-        r["ok"]
-        for r in df.select(
-            ingest.json_value_spans_string(F.col("raw")).alias("ok")
-        ).collect()
-    ]
-    assert got == want, list(zip([r[0] for r in rows], got, want))
+    df = spark.createDataFrame(rows, "i int, raw string")
+    kept = {r["i"] for r in ingest.json_validity_gate(df, "raw").collect()}
+    got = [i in kept for i in range(len(rows))]
+    assert got == want, list(zip([r[1] for r in rows], got, want))
 
 
 @settings(max_examples=12, deadline=None)
